@@ -1,164 +1,149 @@
-"""Distributed connected components — alternating large-star /
-small-star (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14).
+"""Distributed connected components — min-contraction over a hashed
+node order (in the spirit of Hash-to-Min, Rastogi et al., ICDE'13).
 
-A generic graph operator the dedup layer plugs into (the in-window
-``dedup_clusters`` uses the closely-related min-contraction; this
-module is the literal alternating algorithm, exposed standalone so
-any pair-producing operator — near-dup candidates, entity-resolution
-matches, citation links — can cluster with it).
+The one CC operator in the library: the dedup endgame, the B-cubed
+audit and entity resolution all cluster their pair frames with it.
 
-Shape per round (round-14 rewrite; the algorithm is unchanged, the
-physical plan is not): the edge list stays CANONICAL (u > v) across
-rounds, which makes both star operations expressible without
-re-deriving the symmetric view twice per star —
+Each LEVEL contracts every node ``v`` into ``m(v)``, the minimum of
+its closed neighbourhood ``{v} ∪ N(v)``; edges remap to
+``(m(u), m(v))`` with duplicates merged and collapsed edges
+(``m(u) = m(v)``) dropped, and the next level runs on the contracted
+graph. Final labels compose the per-level maps back.
 
-- large-star re-attaches exactly the REVERSED canonical rows to
-  m(u) = min of u's closed neighborhood (one groupBy + one join);
-- small-star's smaller-or-self neighborhood IS the canonical edge
-  list itself, with the self rows recovered from the min-map
-  directly (``least(min(v), u)`` already folds u in) instead of the
-  old ``sym.select(u).distinct()`` union branch — one whole
-  exchange per round gone;
-- only the small-star round deduplicates: min-aggregation is
-  duplicate-insensitive, so large-star's output can skip its
-  ``distinct`` (a second exchange gone) and let the small round's
-  final ``distinct`` clean up;
-- the min-map m is NODE-sized, so both join sides ride a size-gated
-  ``maybe_broadcast`` (gated on the initial node count, a one-time
-  scalar off the checkpointed node frame — node ids never leave the
-  original id set, so the initial count bounds every round). Below
-  the gate each round's joins are broadcast-hash and the UNIQUE
-  shuffle exchanges left are the two min-map groupBy aggregations
-  plus the final distinct (7 -> 3 per round; the min-map subplan
-  appears in several branches of the static plan but AQE's runtime
-  stage cache executes it once — verified at sf0.01: 12 stages
-  planned, 7 ran for one round body). Past the gate (billions of
-  nodes) the hint drops itself and the same plan runs as ordinary
-  shuffle joins — the standard alternating-star shape.
+Why the order is HASHED: the minimum is taken by
+``(xxhash64(id), id)``, not by raw id. Under raw-id order every node
+of a path with consecutive ids contracts into its lower neighbour, so
+the path only shifts down and loses one node per level: it needs one
+level per node, and near-sequential keys such as entity-resolution
+custkeys are exactly that shape. A hash order is a pseudo-random
+permutation: local minima are spread evenly along any chain, and the
+graph shrinks by a constant factor per level in expectation (a
+200-node sorted path converges in a handful of levels instead of
+~200). The level maps store the plain winning id; edges and join keys
+stay plain id columns. The label a component ends on is its
+hash-minimal node, so ONE ``groupBy(label).agg(min(node))`` at the
+end restores the contract: every node is labelled with its
+component's minimum id.
 
-Rounds are O(log d) in practice; every round ends in a
-``localCheckpoint`` so lineage stays flat, and convergence is ONE
-fixpoint probe job per round — a symmetric-difference ``take(1)``
-over the two checkpointed (hence cached, distinct, canonical) edge
-sets. The star forest is a fixpoint of both star operations, proved
-in the paper, so `edges unchanged` is exactly `converged`.
+Termination: in a component that still has an edge, the hash-minimal
+node and any neighbour of it both contract into it, so every level
+removes at least one node from every such component; a component
+that has collapsed to one node has no edges left and leaves the
+loop. The loop therefore always ends, and the convergence test is
+simply ``isEmpty()`` on the contracted edge set — no round cap, no
+fixpoint probe.
 
-No driver-side state beyond the one-row convergence flag and the
-node-count broadcast gate; node ids never leave the JVM.
+The data SHRINKS every level: level 1 is the only pass over the full
+edge set (one groupBy shuffle plus two remap joins and a distinct);
+later levels touch the contracted remainder. The level map is
+node-sized, so it rides a size-gated ``maybe_broadcast``: ONE scalar
+(the node count of the checkpointed level-1 map) gates every level,
+because contraction only ever removes nodes. Past the gate (billions
+of nodes) the hint drops and the same code runs the remaps as
+shuffle joins on node id. Every level's edges end in a checkpoint
+that also drops the plan's size estimate (``_checkpoint``), so both
+the lineage and the planner's statistics stay flat; node ids never
+leave the JVM.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from global_superstore_data_warehouse_spark.operators.debugplan import dump_plan
 from global_superstore_data_warehouse_spark.operators.hints import maybe_broadcast
 
 
-def _star_round(edges: DataFrame, large: bool, n_nodes: int) -> DataFrame:
-    """One star round over a CANONICAL (u > v) edge list that may
-    carry duplicates. Output is canonical; only the small round
-    deduplicates (see module docstring).
+def _order(c: str) -> Column:
+    """The node order: hash first, id as the tie-break."""
+    return F.struct(F.xxhash64(c).alias("h"), F.col(c).alias("id"))
 
-    large-star: every neighbor v > u re-attaches to m(u) = min of
-    u's closed neighborhood; small-star: every neighbor v <= u (and
-    u itself) re-attaches to the min of u's smaller-or-self
-    neighborhood. ``n_nodes`` (the initial node count — an upper
-    bound on any round's node set) gates the broadcast of the
-    node-sized min-map.
-    """
-    rev = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    if large:
-        # closed-neighborhood min needs BOTH directions; duplicates
-        # in `edges` are harmless under min
-        sym = edges.union(rev)
-        m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        # canonical form: the v > u attach rows are exactly `rev`;
-        # m(u) <= u < v, so the output is canonical and never a
-        # self-loop — no filter, no distinct needed here
-        return rev.join(maybe_broadcast(m, n_rows=n_nodes), "u").select(
-            F.col("v").alias("u"), F.col("m").alias("v")
-        )
-    # small-star: the smaller-neighbor rows ARE the canonical edge
-    # list; least(min(v), u) folds the self row into the min, and the
-    # self ATTACH rows come straight off the min-map (u -> m(u)) —
-    # no sym rebuild, no distinct-u union branch
-    m = edges.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-    out = (
-        edges.join(maybe_broadcast(m, n_rows=n_nodes), "u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .union(m.select("u", F.col("m").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """``localCheckpoint`` that forgets the plan's size estimate.
+
+    A checkpoint keeps its source plan's estimated size, and a join's
+    estimate is the PRODUCT of its inputs'. A level joins its edges
+    to two maps sized like those edges, so the carried estimate is
+    cubed every level: its digit count triples, and the planner's
+    BigInt arithmetic alone took 120 s at level 14 of a 20001-node
+    path (4 cores). Re-reading the checkpointed rows as a fresh
+    relation (JVM only) starts every level from the default estimate;
+    the join strategies are unaffected — the size-gated hints pick
+    them, and AQE re-plans from runtime sizes."""
+    spark = df.sparkSession
+    ck = df.localCheckpoint()._jdf
+    return DataFrame(
+        spark._jsparkSession.createDataFrame(ck.javaRDD(), ck.schema()), spark
     )
-    return out
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 50,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Label every node in ``edges`` with its component's MINIMUM
     node id. Returns ``(node, component)`` — one row per distinct
-    node that appears in the edge list (attach singletons yourself;
-    they never need to ride the iteration).
+    node that appears in the edge list, self-loop-only nodes
+    included (attach singletons yourself; they never need to ride the
+    iteration).
 
     Numeric or otherwise totally-ordered node ids required (the
     component representative is the order minimum).
     """
-    e = (
-        edges.select(
-            F.greatest(src, dst).alias("u"), F.least(src, dst).alias("v")
+    # symmetric edge set, built in ONE pass over the (possibly lazy)
+    # input: `src` alone covers every node, and the min over a node's
+    # groupBy(src) is its whole neighbourhood (duplicates are harmless
+    # under min)
+    fwd = F.struct(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    rev = F.struct(F.col(dst).alias("src"), F.col(src).alias("dst"))
+    cur = _checkpoint(edges.select(F.inline(F.array(fwd, rev))))
+    levels = []
+    n_nodes = None
+    while True:
+        m = (
+            cur.groupBy("src")
+            .agg(F.min(_order("dst")).alias("nmin"))
+            .select(
+                F.col("src").alias("v"),
+                F.least(_order("src"), "nmin")["id"].alias("m"),
+            )
+            .localCheckpoint()
         )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    # one scalar off the cached node frame: every round's node set is
-    # a subset of the original ids, so this count is a sound upper
-    # bound for the per-round broadcast gates (conservative past the
-    # gate: at billions of nodes the hints drop and the same plan
-    # runs the shuffle-join star rounds)
-    n_nodes = nodes.count()
-    first = e  # shared with `nodes`' lineage — never unpersisted here
-    for rnd in range(max_rounds):
-        after_large = _star_round(e, large=True, n_nodes=n_nodes)
-        round_body = _star_round(after_large, large=False, n_nodes=n_nodes)
-        if rnd == 0:
+        if n_nodes is None:
+            # level 1 maps every node once: a cached narrow count, and
+            # a sound upper bound for every later level's map
+            n_nodes = m.count()
+        levels.append(m)
+        ms = maybe_broadcast(
+            m.select(F.col("v").alias("src"), F.col("m").alias("ms")), n_rows=n_nodes
+        )
+        md = maybe_broadcast(
+            m.select(F.col("v").alias("dst"), F.col("m").alias("md")), n_rows=n_nodes
+        )
+        level_body = (
+            cur.join(ms, "src")
+            .join(md, "dst")
+            .filter(F.col("ms") != F.col("md"))
+            .select(F.col("ms").alias("src"), F.col("md").alias("dst"))
+            .distinct()
+        )
+        if len(levels) == 1:
             # evidence hook (no-op unless SPARK_GRAFT_PLAN_DIR set):
-            # the final explain is post-checkpoint, so the per-round
-            # join strategy is captured here
-            dump_plan(round_body, "star_cc_round_body")
-        after_small = round_body.localCheckpoint()
-        # single probe job: both sets are distinct + checkpointed, so
-        # the symmetric difference reads cached rows and take(1)
-        # early-exits on the first witness of change
-        changed = not (
-            after_small.exceptAll(e)
-            .unionAll(e.exceptAll(after_small))
-            .isEmpty()
-        )
-        # the probe was the old round's last reader — release its
-        # blocks (same session-lifetime leak the round-8 advisor
-        # flagged in the percentile/k-center/k-core loops)
-        if e is not first:
-            e.unpersist()
-        e = after_small
-        if not changed:
+            # the per-level remap join strategy is invisible in the
+            # final post-checkpoint explain — capture level 1 here
+            dump_plan(level_body, "connected_components_level_body")
+        cur = _checkpoint(level_body)
+        if cur.isEmpty():
             break
-    # star forest: u -> root(v); roots label themselves
-    labels = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = nodes.join(
-        labels.select("node"), "node", "left_anti"
-    ).withColumn("component", F.col("node"))
-    return labels.unionByName(roots)
+
+    total = levels[0].select(F.col("v").alias("node"), F.col("m").alias("label"))
+    for lv in levels[1:]:
+        total = total.join(
+            maybe_broadcast(lv, n_rows=n_nodes), total.label == lv.v, "left"
+        ).select("node", F.coalesce("m", "label").alias("label"))
+    # labels are hash-minimal nodes; re-key each component on its min id
+    rep = total.groupBy("label").agg(F.min("node").alias("component"))
+    return total.join(maybe_broadcast(rep, n_rows=n_nodes), "label").select(
+        "node", "component"
+    )

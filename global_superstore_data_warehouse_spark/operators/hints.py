@@ -83,23 +83,10 @@ def spread_scan(
 
     spark = df.sparkSession
     n = _session_parallelism(df)
-    # the conf value is a SIZE STRING ('134217728b', '512m', ...) —
-    # round-14 ADVICE fix: int() always raised on the unit suffix and
-    # the bare except silently pinned the gate to the 128 MB default,
-    # ignoring a deployment-tuned maxPartitionBytes. Parse with the
-    # same JavaUtils routine Spark itself uses; the hard default only
-    # remains for a session with no JVM gateway (never in practice).
-    raw = spark.conf.get(
-        "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)
-    )
-    try:
-        max_split = int(raw)
-    except ValueError:
-        max_split = int(
-            spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-                raw
-            )
-        )
+    # the conf value is a size string ('128m', '1g', ...); read the
+    # value Spark already parsed — a malformed one is rejected when it
+    # is set, so there is nothing left to parse or default here
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     if table_bytes(sf_dir, table) >= max_split * n:
         return df
     return df.repartition(n, by) if by else df.repartition(n)

@@ -1,9 +1,10 @@
-"""operators/graph.py — alternating large-star/small-star connected
-components: union-find property tests + dedup-endgame equivalence."""
+"""operators/graph.py — hash-ordered min-contraction connected
+components: union-find property tests and the chain worst case."""
 
 import random
+import re
 
-from pyspark.sql import functions as F
+import pytest
 
 from global_superstore_data_warehouse_spark.operators.graph import (
     connected_components,
@@ -32,6 +33,8 @@ def test_cc_matches_union_find_on_random_graphs(spark):
         n = rng.randint(4, 80)
         m = rng.randint(1, 120)
         edges = [(rng.randint(0, n), rng.randint(0, n)) for _ in range(m)]
+        # a node whose only edge is a self-loop is its own component
+        edges.append((n + 1, n + 1))
         nodes = sorted({x for e in edges for x in e})
         df = spark.createDataFrame(edges, "src: long, dst: long")
         got = {
@@ -41,28 +44,41 @@ def test_cc_matches_union_find_on_random_graphs(spark):
         assert got == _uf_components(edges, nodes)
 
 
-def test_cc_chain_worst_case_diameter(spark):
-    """A 200-node path: diameter-bound algorithms need ~200 rounds;
-    the star family needs O(log n) — the loop must converge well
-    inside max_rounds and label everything with the path's min."""
-    edges = [(i, i + 1) for i in range(200)]
+@pytest.mark.parametrize("order", ["ascending", "descending", "shuffled"])
+def test_cc_chain_worst_case_diameter(spark, order):
+    """A 201-node path: diameter-bound algorithms need ~200 rounds,
+    and so does min-contraction over RAW ids when consecutive ids sit
+    next to each other (one node per level). The hashed order must
+    converge in a few levels whatever way the ids run along the path;
+    the job bound turns a regression to raw-id order (several jobs
+    per level, one level per node) into a failure instead of a slow
+    pass."""
+    ids = list(range(201))
+    if order == "descending":
+        ids.reverse()
+    elif order == "shuffled":
+        random.Random(7).shuffle(ids)
+    edges = list(zip(ids, ids[1:]))
     df = spark.createDataFrame(edges, "src: long, dst: long")
-    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
+    sc = spark.sparkContext
+    group = f"cc-chain-{order}"
+    sc.setJobGroup(group, "connected_components chain")
+    try:
+        out = connected_components(df)
+        got = {r["node"]: r["component"] for r in out.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     assert len(got) == 201
     assert set(got.values()) == {0}
-
-
-def test_smallstar_dedup_equals_min_contraction(spark, duck, sf_dir):
-    """The generic graph operator must reproduce dedup_clusters'
-    labels exactly (same pair gen, same canonical-min contract)."""
-    from global_superstore_data_warehouse_spark.plans.textops import (
-        dedup_clusters,
-        dedup_clusters_smallstar,
-    )
-
-    a = sorted(map(tuple, dedup_clusters(spark, sf_dir).collect()))
-    b = sorted(map(tuple, dedup_clusters_smallstar(spark, sf_dir).collect()))
-    assert a == b
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) < 150
+    # each level's checkpoint must not carry the size estimate forward:
+    # a join's estimate is the product of its inputs', so a carried one
+    # gains digits geometrically with the level count (past a long's
+    # range Spark prints it as "9.22E+187 B")
+    est = out._jdf.queryExecution().optimizedPlan().stats().simpleString()
+    digits = re.search(r"E\+(\d+) B", est)
+    assert digits is None or int(digits.group(1)) < 1000, est
 
 
 def test_cc_no_python_workers(spark):

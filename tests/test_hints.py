@@ -8,6 +8,7 @@ code compiles to a shuffle join. Hash-parity of the gated callers
 tests — the gate must never change results, only strategy.
 """
 
+import pytest
 from pyspark.sql import DataFrame
 
 from global_superstore_data_warehouse_spark.operators.hints import maybe_broadcast
@@ -197,6 +198,33 @@ def test_spread_scan_noop_past_the_gate(spark, sf_dir, monkeypatch):
         load(spark, sf_dir, "documents"), sf_dir, "documents", by="doc_id"
     )
     assert "Exchange" not in _physical(df)
+
+
+def test_spread_scan_reads_size_string_conf(spark, sf_dir, monkeypatch):
+    """maxPartitionBytes is a size string: '1g' must move the gate (a
+    table sized exactly at the 128m default gate is a no-op, and
+    spreads once the split size grows), and a malformed value fails
+    loudly when it is set, never reaching the gate."""
+    from pyspark.errors import PySparkException
+
+    from global_superstore_data_warehouse_spark import catalog
+    from global_superstore_data_warehouse_spark.catalog import load
+    from global_superstore_data_warehouse_spark.operators import hints
+
+    key = "spark.sql.files.maxPartitionBytes"
+    docs = load(spark, sf_dir, "documents")
+    n = hints._session_parallelism(docs)
+    monkeypatch.setattr(catalog, "table_bytes", lambda d, t: 128 * 1024**2 * n)
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "128m")
+        assert "Exchange" not in _physical(hints.spread_scan(docs, sf_dir, "documents"))
+        spark.conf.set(key, "1g")
+        assert "Exchange" in _physical(hints.spread_scan(docs, sf_dir, "documents"))
+        with pytest.raises(PySparkException, match="INVALID_CONF_VALUE"):
+            spark.conf.set(key, "12x")
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_cpu_repartition_pins_width_against_aqe(spark):
